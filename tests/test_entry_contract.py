@@ -173,7 +173,6 @@ def test_queries_against_oracles(spark, sf_dir):
 
 @pytest.mark.slow
 def test_queries_against_oracles_sf001(spark):
-    os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
     # run the same gate at the driver's sf0.01 scale when requested
     if not os.path.isdir("/root/testdata/sf0.01"):
         pytest.skip("sf0.01 not present")

@@ -2,14 +2,17 @@
 are themselves pinned to the reference by the golden/naive-oracle suites).
 """
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tsdownsample_spark.kernels.batch import batch_downsample
+from tsdownsample_spark.kernels.flat import flat_downsample, select_and_gather
 from tsdownsample_spark.kernels.selectors import downsample_array
 from tsdownsample_spark.operators.downsample import (
+    ALGOS,
     downsample_series,
     downsample_tokens,
     gather_values,
@@ -71,22 +74,75 @@ def test_token_downsample_no_shuffle(spark):
 
 
 def test_batch_matches_per_series():
+    """The flat batch kernel over one (values, offsets) buffer == the
+    per-series kernel on each slice, for every selector."""
     rng = np.random.default_rng(5)
     # 114/202/254 are lengths where the last equal-count bin's floor product
     # rounds down and excludes the series tail (reference FP behavior) —
-    # regression guard for the batch concatenation layout.
+    # regression guard for the flat concatenation layout.
     arrays = [rng.standard_normal(n) for n in (50, 1_000, 114, 202, 254, 10_032, 3, 2_321)]
-    for algo in ("minmax", "m4", "nanminmax", "nanm4", "minmaxlttb", "everynth"):
-        batched = batch_downsample(arrays, 100, algo=algo)
-        for a, b in zip(arrays, batched):
-            np.testing.assert_array_equal(b, downsample_array(a, 100, algo=algo))
+    offsets = np.zeros(len(arrays) + 1, dtype=np.int64)
+    np.cumsum([len(a) for a in arrays], out=offsets[1:])
+    values = np.concatenate(arrays)
+    for algo in ALGOS:
+        n_out = 101 if algo == "lttb" else 100
+        flat, out_off = flat_downsample(values, offsets, n_out, algo)
+        for s, a in enumerate(arrays):
+            np.testing.assert_array_equal(
+                flat[out_off[s] : out_off[s + 1]],
+                downsample_array(a, n_out, algo=algo),
+                err_msg=f"{algo} len {len(a)}",
+            )
 
 
 def test_batch_handles_nulls():
-    arrays = [np.arange(100.0), None, np.arange(5.0)]
-    out = batch_downsample(arrays, 10, algo="minmax")
-    assert out[1] is None
-    assert out[2].tolist() == [0, 1, 2, 3, 4]
+    """select_and_gather on batches with null rows: nulls stay null, every
+    other row matches the per-series kernel, gathered tokens are
+    values[idx] — across empty/short/long rows, an all-null column, a
+    sliced ListArray (offset != 0) and a multi-chunk ChunkedArray."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(9)
+    rows = [
+        None,
+        rng.integers(0, 50, 500).tolist(),
+        [],
+        None,
+        rng.integers(0, 50, 7).tolist(),
+        rng.integers(0, 50, 3_000).tolist(),
+        None,
+        rng.integers(0, 50, 254).tolist(),
+    ]
+    arr = pa.array(rows, type=pa.list_(pa.int32()))
+    cases = {
+        "mixed": arr,
+        "all_null": pa.array([None, None, None], type=pa.list_(pa.int32())),
+        "sliced": arr.slice(3, 4),
+        "chunked": pa.chunked_array([arr.slice(0, 2), arr.slice(2, 3), arr.slice(5)]),
+    }
+    for (name, col), algo, gather in itertools.product(
+        cases.items(), ALGOS, (True, False)
+    ):
+        where = (name, algo, gather)
+        expected = col.to_pylist()
+        sel_arr, tok_arr = select_and_gather(col, 20, algo, gather=gather)
+        assert len(sel_arr) == len(expected), where
+        sel_arr.validate(full=True)
+        if gather:
+            tok_arr.validate(full=True)
+        else:
+            assert tok_arr is None
+        for i, toks in enumerate(expected):
+            idx = sel_arr[i].as_py()
+            if toks is None:
+                assert idx is None, (where, i)
+                if gather:
+                    assert tok_arr[i].as_py() is None, (where, i)
+                continue
+            exp = downsample_array(np.asarray(toks, dtype=np.int32), 20, algo=algo)
+            assert idx == exp.tolist(), (where, i)
+            if gather:
+                assert tok_arr[i].as_py() == [toks[j] for j in idx], (where, i)
 
 
 def test_long_form_series_parity(spark):
@@ -174,8 +230,9 @@ def test_output_select_matches_append(token_df):
         .select("doc_id", "sel_idx", "sel_tokens").collect()
     )
     assert a == b
-    with pytest.raises(ValueError, match="arrow"):
-        downsample_tokens(token_df, 48, impl="pandas", output="select")
+    for impl in ("pandas", "bogus"):
+        with pytest.raises(ValueError, match="unknown impl"):
+            downsample_tokens(token_df, 48, impl=impl)
 
 
 def test_scan_downsample_matches_operator(spark, tmp_path):

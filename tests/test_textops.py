@@ -150,38 +150,6 @@ class TestDedup:
         }
         assert j_fast == j_md5 and j_fast[("a", "b")] > 0.5
 
-    def test_jaccard_length_prefilter_is_exact(self, spark):
-        """length_prefilter=True engages the size-ratio prefilter
-        (J <= min/max, the classic length filter).  It must be invisible in
-        the results: the thresholded output equals the unthresholded output
-        filtered after the fact, including boundary pairs, while pairs
-        whose size ratio provably caps J below threshold never ship their
-        arrays.  (Opt-in: a measured loss on LSH-sourced pairs — see the
-        jaccard_pairs docstring / BENCH/ab_jaccard_prefilter.json.)"""
-        docs = [
-            ("a", "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"),
-            ("b", "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w13"),  # near-dup of a
-            ("c", "w1 w2 w3"),  # tiny: vs a, min/max caps J << 0.5
-            ("d", "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10 x11 x12"),  # disjoint from a
-        ]
-        df = spark.createDataFrame(docs, "doc_id string, text string")
-        pairs = spark.createDataFrame(
-            [("a", "b"), ("a", "c"), ("a", "d")], "id_a string, id_b string"
-        )
-        got = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in jaccard_pairs(
-                df, pairs, threshold=0.5, length_prefilter=True
-            ).collect()
-        }
-        manual = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in jaccard_pairs(df, pairs).collect()
-            if r.jaccard >= 0.5
-        }
-        assert got == manual
-        assert ("a", "b") in got and ("a", "c") not in got and ("a", "d") not in got
-
     def test_simhash_xxhash64_same_shape(self, spark):
         df = spark.createDataFrame(
             [

@@ -330,39 +330,41 @@ def select_and_gather(col, n_out: int, algo: str, gather: bool = True, **kw):
     values per series ever leave this function.  One implementation for
     operators.downsample's select mode and sources.scan's in-task reader —
     a fix here (null rows, sliced-array offsets, dtype edges) reaches both.
+
+    Null rows are filtered out before the kernel runs and put back as
+    null entries (zero-length offsets + validity mask) afterwards, so a
+    batch with nulls takes the same flat path as one without.
     """
     import pyarrow as pa
 
-    from tsdownsample_spark.kernels.batch import batch_downsample
-
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
+    dense, valid = col, None
     if col.null_count:
-        # slow path for null rows
-        arrays = [None if v is None else np.asarray(v) for v in col.to_pylist()]
-        sel = batch_downsample(arrays, n_out, algo=algo, **kw)
-        sel_arr = pa.array(
-            [None if s is None else s for s in sel], type=pa.list_(pa.int64())
-        )
-        tok_arr = (
-            pa.array(
-                [
-                    None if s is None else np.asarray(a)[s]
-                    for a, s in zip(arrays, sel)
-                ],
-                type=pa.list_(col.type.value_type),
-            )
-            if gather
-            else None
-        )
-        return sel_arr, tok_arr
-    offsets = col.offsets.to_numpy()
-    values = col.values.to_numpy(zero_copy_only=False)
+        is_valid = col.is_valid()
+        dense = col.filter(is_valid)
+        valid = is_valid.to_numpy(zero_copy_only=False)
+    offsets = dense.offsets.to_numpy()
+    values = dense.values.to_numpy(zero_copy_only=False)
     flat, out_off = flat_downsample(values, offsets, n_out, algo, **kw)
+    out_lens = np.diff(out_off)
+    mask = None
+    if valid is not None:
+        # scatter the dense rows' output lengths back to their positions;
+        # null rows get zero-length slots under the validity mask
+        lens = np.zeros(len(col), dtype=np.int64)
+        lens[valid] = out_lens
+        out_off = np.zeros(len(col) + 1, dtype=np.int64)
+        np.cumsum(lens, out=out_off[1:])
+        mask = pa.array(~valid)
     oo = pa.array(out_off, type=pa.int32())
-    sel_arr = pa.ListArray.from_arrays(oo, pa.array(flat, type=pa.int64()))
+    sel_arr = pa.ListArray.from_arrays(
+        oo, pa.array(flat, type=pa.int64()), mask=mask
+    )
     tok_arr = None
     if gather:
-        abs_idx = flat + np.repeat(offsets[:-1].astype(np.int64), np.diff(out_off))
-        tok_arr = pa.ListArray.from_arrays(oo, pa.array(values[abs_idx]))
+        abs_idx = flat + np.repeat(offsets[:-1].astype(np.int64), out_lens)
+        tok_arr = pa.ListArray.from_arrays(
+            oo, pa.array(values[abs_idx]), mask=mask
+        )
     return sel_arr, tok_arr

@@ -184,7 +184,6 @@ def jaccard_pairs(
     shingle: int = 3,
     threshold: float = 0.0,
     hash: str | None = None,
-    length_prefilter: bool = False,
 ) -> DataFrame:
     """Verify candidate pairs with exact Jaccard over distinct shingles.
 
@@ -199,20 +198,6 @@ def jaccard_pairs(
     element instead of ~8+ bytes per WORD — the Jaccard value is unchanged
     up to 64-bit collisions (~n²/2^65 per doc pair, negligible).  Default
     ``None`` keeps raw strings for exact oracle parity.
-
-    ``length_prefilter=True`` (needs ``threshold > 0``) drops pairs before
-    their shingle ARRAYS are ever joined: |A∩B| <= min and |A∪B| >= max, so
-    J(A,B) <= min(|A|,|B|)/max(|A|,|B|) — a pair failing the size-ratio
-    test cannot reach the threshold (EXACT, zero false drops; the classic
-    length filter of set-similarity joins).  It is OFF by default because
-    it is a measured LOSS on this engine's own pipeline: LSH candidate
-    pairs are already similarity-biased, so the size test drops ~nothing
-    while the per-doc size column costs two extra shingle-derivation
-    passes — verify 5.9 s -> 12.0 s at 8 cores on the 40k-doc ladder
-    fixture (BENCH/ab_jaccard_prefilter.json, randomized-order A/B,
-    0 of 3957 candidates dropped).  Turn it on only when ``pairs`` comes
-    from a source with no similarity bias (e.g. blocking on metadata keys),
-    where the drop rate — not the size-pass cost — dominates.
 
     r6: ``pairs`` is consumed four times here (the id-restriction union
     twice, then both verify joins) and the shingle-set base twice — both
@@ -234,26 +219,6 @@ def jaccard_pairs(
     docs = materialize_shared(
         df.select(F.col(id_col), sh.alias("sh")).join(ids, id_col, "left_semi")
     )
-    if length_prefilter and threshold > 0:
-        sizes = docs.select(F.col(id_col), F.size("sh").alias("n"))
-        pairs = (
-            pairs.join(
-                sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("_na")),
-                "id_a",
-            )
-            .join(
-                sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("_nb")),
-                "id_b",
-            )
-            .where(
-                # slack of one rounding quantum: the final filter compares
-                # ROUND(J, 6) >= t, and a raw J in (t - 0.5e-6, t) rounds UP
-                # to t — the prefilter must not drop those boundary pairs
-                F.least("_na", "_nb")
-                >= F.lit(float(threshold) - 1e-6) * F.greatest("_na", "_nb")
-            )
-            .select("id_a", "id_b")
-        )
     j = (
         pairs.join(
             docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")),

@@ -30,12 +30,12 @@ Plan shape (audited via .explain): the identity/pass-through branches are
 plain UNIONs, and Catalyst does not share subtrees across union branches —
 left alone, each branch re-runs the scan + rank window (r6 audit:
 q_minmaxlttb_x_long = 6 parquet scans / 13 sorts).  Since r6 the branching
-selectors therefore ``_materialize`` (eager localCheckpoint) their ranked
+selectors therefore ``_materialize`` (persist + eager count) their ranked
 base once per invocation and every branch reads the materialized blocks;
 ``everynth_long`` (single-consumer projection) deliberately does not.
 The expensive parts stay single either way — ONE rank exchange and ONE
 partially-aggregated groupBy — and both disappear when the source table is
-bucketed+sorted by the series key (the checkpoint preserves
+bucketed+sorted by the series key (the cached plan preserves
 outputPartitioning/ordering; verified:
 tests/test_plans.py::test_long_selector_shuffle_free_on_bucketed_source
 shows a zero-Exchange plan with identical results).

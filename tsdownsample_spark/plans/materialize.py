@@ -21,7 +21,10 @@ Mechanics and constraints:
 * This is per-invocation work: every call recomputes from its input —
   nothing persists across bench/oracle runs, and results are
   bit-identical (materialization only, no arithmetic change).  Blocks
-  are freed by the ContextCleaner once the DataFrame is unreachable.
+  are NOT freed when the DataFrame becomes unreachable: the CacheManager
+  keeps every persisted plan until an explicit unpersist, and only
+  ``release_materialized()`` issues it.  Library callers outside the
+  query loaders must call it once they are done with the results.
 * Batch-only: calling it on a streaming DataFrame is an error by
   construction (persist is unsupported there) — keep it out of
   foreachBatch-external streaming lineage.
