@@ -246,6 +246,15 @@ class TestSimilarity:
         full_ivf = ivf_ann_topk(embeds, probes, k=5, n_cells=4, nprobe=4)
         r = recall_at_k(exact, full_ivf).agg(F.min("recall")).collect()[0][0]
         assert r == 1.0
+        # identical top-k rows, scores included, from both ANN paths
+        cols = ["probe_id", "rank", "neighbor_id", "cos_r"]
+        want = sorted(exact.select(cols).collect())
+        full_lsh = lsh_ann_topk(embeds, probes, k=5, n_planes=1, nprobe=2)
+        for ann in (full_ivf, full_lsh):
+            assert sorted(ann.select(cols).collect()) == want
+            # the probe norm is computed below the multiprobe explode
+            plan = ann._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.index("Generate explode") < plan.index("AS _np")
         exact.unpersist()
 
     def test_ann_recall_report_floors(self, spark, embeds):

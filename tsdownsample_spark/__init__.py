@@ -17,7 +17,16 @@ Re-expresses the operator semantics of ``predict-idlab/tsdownsample``
   ANN similarity search, text analysis, multimodal column plumbing.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+# inside a Spark Python worker, stop every task from re-reading the zip
+# archives on sys.path (plans/worker.py)
+if "pyspark.worker_util" in sys.modules:
+    from tsdownsample_spark.plans.worker import install as _install_worker_guard
+
+    _install_worker_guard()
 
 from tsdownsample_spark.compat import (  # noqa: F401
     EveryNthDownsampler,

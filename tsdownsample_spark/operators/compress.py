@@ -6,7 +6,9 @@ both as ``binary`` columns.  ``decompress_series`` is its lossless inverse
 (round-trip equality is the tested invariant).
 
 Arrow-batched pandas UDFs; the codec kernels are vectorized NumPy (encode)
-— no per-point Python in the encode path.
+— no per-point Python in the encode path.  The UDFs are built per call, so
+importing this module needs no SparkSession and a new session never sees a
+UDF bound to a stopped one.
 """
 
 from __future__ import annotations
@@ -27,22 +29,18 @@ from tsdownsample_spark.functions.codecs import (
 )
 
 
-@pandas_udf("binary")
 def _enc_ts(col: pd.Series) -> pd.Series:
     return col.map(lambda a: None if a is None else encode_dod(np.asarray(a)))
 
 
-@pandas_udf("binary")
 def _enc_val(col: pd.Series) -> pd.Series:
     return col.map(lambda a: None if a is None else encode_gorilla(np.asarray(a)))
 
 
-@pandas_udf("array<bigint>")
 def _dec_ts(col: pd.Series) -> pd.Series:
     return col.map(lambda b: None if b is None else decode_dod(bytes(b)))
 
 
-@pandas_udf("array<double>")
 def _dec_val(col: pd.Series) -> pd.Series:
     return col.map(lambda b: None if b is None else decode_gorilla(bytes(b)))
 
@@ -109,8 +107,8 @@ def compress_series(
     return packed.select(
         *keys,
         "n",
-        _enc_ts("_xs").alias("ts_blob"),
-        _enc_val("_ys").alias("val_blob"),
+        pandas_udf(_enc_ts, "binary")("_xs").alias("ts_blob"),
+        pandas_udf(_enc_val, "binary")("_ys").alias("val_blob"),
     )
 
 
@@ -126,7 +124,8 @@ def decompress_series(
     out = df.select(
         *by,
         F.arrays_zip(
-            _dec_ts("ts_blob").alias("x"), _dec_val("val_blob").alias("y")
+            pandas_udf(_dec_ts, "array<bigint>")("ts_blob").alias("x"),
+            pandas_udf(_dec_val, "array<double>")("val_blob").alias("y"),
         ).alias("_pts"),
     ).select(*by, F.explode("_pts").alias("_p"))
     x_expr = F.col("_p.x").cast("long")
@@ -138,7 +137,6 @@ def decompress_series(
 # --------------------------------------------------- token-table compression
 
 
-@pandas_udf("binary")
 def _enc_tok(col: pd.Series) -> pd.Series:
     from tsdownsample_spark.functions.codecs import encode_tokens
 
@@ -147,7 +145,6 @@ def _enc_tok(col: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf("array<int>")
 def _dec_tok(col: pd.Series) -> pd.Series:
     from tsdownsample_spark.functions.codecs import decode_tokens
 
@@ -162,11 +159,13 @@ def compress_tokens(
     in -> one row out — bounded regardless of sequence length; NULL rows
     stay NULL.  The storage shape for cold tiers: pair with
     :func:`decompress_tokens` for a bit-exact round trip."""
-    return df.withColumn(out_col, _enc_tok(F.col(tokens_col))).drop(tokens_col)
+    packed = pandas_udf(_enc_tok, "binary")(F.col(tokens_col))
+    return df.withColumn(out_col, packed).drop(tokens_col)
 
 
 def decompress_tokens(
     df: DataFrame, packed_col: str = "tokens_packed", out_col: str = "tokens"
 ) -> DataFrame:
     """Lossless inverse of :func:`compress_tokens`."""
-    return df.withColumn(out_col, _dec_tok(F.col(packed_col))).drop(packed_col)
+    tokens = pandas_udf(_dec_tok, "array<int>")(F.col(packed_col))
+    return df.withColumn(out_col, tokens).drop(packed_col)

@@ -373,17 +373,19 @@ def ivf_ann_topk(
     if len(cents) != n_cells:
         raise ValueError(f"centroids has {len(cents)} cells, expected {n_cells}")
     # per-vector/per-probe norms precomputed before the join (see
-    # cosine_topk) — same IEEE expression, 3x less per-pair fold work
+    # cosine_topk) — same IEEE expression, 3x less per-pair fold work; the
+    # probe norm before the explode, so once per probe, not per probed cell/bucket
     v = vectors.withColumn("cell", F.expr(cell_expr(vec_col, cents))).withColumn(
         "_nv", F.expr(_norm_expr(vec_col))
     )
     p = (
-        probes.withColumn(
+        probes.withColumn("_np", F.expr(_norm_expr(vec_col)))
+        .withColumn(
             "cell", F.explode(F.expr(probe_cells_expr(vec_col, cents, nprobe)))
         )
         .select(
             F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec"),
-            "cell", F.expr(_norm_expr(vec_col)).alias("_np"),
+            "cell", "_np",
         )
     )
     joined = v.alias("v").join(
@@ -468,19 +470,21 @@ def lsh_ann_topk(
     planes = lsh_planes(dim, n_planes, seed)
     be = bucket_expr(vec_col, planes)
     # per-vector/per-probe norms precomputed before the join (see
-    # cosine_topk) — same IEEE expression, 3x less per-pair fold work
+    # cosine_topk) — same IEEE expression, 3x less per-pair fold work; the
+    # probe norm before the explode, so once per probe, not per probed cell/bucket
     v = vectors.withColumn("bucket", F.expr(be)).withColumn(
         "_nv", F.expr(_norm_expr(vec_col))
     )
     p = (
-        probes.withColumn(
+        probes.withColumn("_np", F.expr(_norm_expr(vec_col)))
+        .withColumn(
             "bucket", F.explode(F.expr(probe_buckets_expr(vec_col, planes, nprobe)))
         )
         .select(
             F.col(id_col).alias("probe_id"),
             F.col(vec_col).alias("probe_vec"),
             "bucket",
-            F.expr(_norm_expr(vec_col)).alias("_np"),
+            "_np",
         )
     )
     joined = v.alias("v").join(

@@ -181,12 +181,13 @@ def ladder_single_pass(
 
     The cascade (above) is the steady-state refresh shape — tier k costs
     ∝ tier k-1's size.  For a FULL build or backfill, though, the cascade
-    pays one Spark job per tier, and the measured fixed per-job driver cost
-    (~0.5 s, BENCH/BASELINE.md's Amdahl decomposition) dominates exactly
-    when tiers are small; this builder instead computes every tier's
-    selection against raw in one ``mapInArrow`` pass (the pyramid
-    machinery: one scan, one Arrow crossing, k kernels on the in-cache
-    batch).  Equality with the cascade is the module's proven
+    pays one Spark job per tier, and the measured fixed per-job cost
+    (~0.5 s, BENCH/BASELINE.md's Amdahl decomposition; ~0.2 s of that was
+    a per-task cost in the Python worker, which plans/worker.py has since
+    removed) dominates exactly when tiers are small; this builder instead
+    computes every tier's selection against raw in one ``mapInArrow`` pass
+    (the pyramid machinery: one scan, one Arrow crossing, k kernels on the
+    in-cache batch).  Equality with the cascade is the module's proven
     cascade == from-raw property — asserted per tier in
     tests/test_token_retention.py.
 
