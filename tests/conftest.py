@@ -16,6 +16,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _release_materialized():
+    """Unpersist the frames a test materialized with ``materialize_shared``,
+    so a later test's plan cannot have one substituted into it."""
+    yield
+    from tsdownsample_spark.plans.materialize import release_materialized
+
+    release_materialized()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -1,12 +1,20 @@
 """Physical-plan audits: the properties the engine's scale story depends on
 must be visible in `.explain` output, not just claimed."""
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from tsdownsample_spark.operators.downsample import downsample_tokens
 from tsdownsample_spark.operators.rollup import rollup_raw
 from tsdownsample_spark.sources.synth import synth_token_table
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _plan(df) -> str:
@@ -255,3 +263,90 @@ def test_connected_components_round_is_window_based(spark):
     plan = _plan(connected_components(pairs, max_iter=1))
     assert "collect_list" not in plan
     assert "CartesianProduct" not in plan
+
+
+SERIES_PASSES = """
+import json, sys
+import numpy as np, pyarrow as pa, pyarrow.parquet as pq
+from pyspark.sql import functions as F
+from tsdownsample_spark.operators.gapfill import gap_fill
+from tsdownsample_spark.operators.rollup import (
+    continuous_rollup, retention_tiers, with_derived)
+from tsdownsample_spark.operators.sql_selectors import minmax_long
+from tsdownsample_spark.plans.materialize import release_materialized
+from tsdownsample_spark.plans.session import get_spark
+from tsdownsample_spark.queries import queries
+from tsdownsample_spark.sources.tableio import SnapshotTable
+
+tmp, sf_dir = sys.argv[1], sys.argv[2]
+rng = np.random.default_rng(0)
+files = []
+for part in range(2):
+    keys = np.repeat(np.arange(part * 8, part * 8 + 8), 300)
+    ts = 1_700_000_000_000_000 + np.tile(np.arange(300) * 20_000_000, 8)
+    keep = rng.random(keys.size) > 0.2
+    files.append(f"{tmp}/part-{part}.parquet")
+    pq.write_table(pa.table({
+        "series_key": keys[keep],
+        "ts": pa.array(ts[keep], type=pa.timestamp("us")),
+        "value": rng.standard_normal(int(keep.sum())),
+    }), files[-1])
+
+spark = get_spark(app_name="codegen-cache", master="local[2]", shuffle_partitions=4,
+                  extra_conf={"spark.ui.showConsoleProgress": "false"})
+compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+qs = queries()
+AGG = ("count(*)", "sum(agg_cnt)", "sum(agg_sum)", "min(agg_min)", "max(agg_max)",
+       "sum(first_val)", "sum(last_val)")
+
+
+def series_pass(i):
+    tiers = retention_tiers(spark.read.parquet(*files), by=["series_key"])
+    for tier in ("1m", "1h", "1d"):
+        tiers[tier].selectExpr(*AGG).collect()
+    t1m = with_derived(tiers["1m"])
+    gap_fill(t1m, "1 minute", by=["series_key"], strategy="locf").agg(
+        F.count("*"), F.sum(F.col("is_gap").cast("long")), F.sum("agg_avg")
+    ).collect()
+    minmax_long(t1m, 20, order=["bucket_ts"], by=["series_key"], y_col="agg_max").collect()
+    release_materialized()
+    for q in ("q_rollup_1m", "q_gapfill_locf", "q_minmax_long"):
+        qs[q](spark, sf_dir).collect()
+    raw_tbl = SnapshotTable(f"{tmp}/raw{i}")
+    tier_tbl = SnapshotTable(f"{tmp}/tier{i}")
+    for f in files:
+        raw_tbl.append(spark.read.parquet(f))
+        continuous_rollup(spark, raw_tbl, tier_tbl, "1m")
+
+
+counts = []
+for i in range(2):
+    before = compiles.getCount()
+    series_pass(i)
+    counts.append(compiles.getCount() - before)
+spark.stop()
+print(json.dumps(counts))
+"""
+
+
+def test_series_plans_compile_once_per_jvm(sf_dir, tmp_path):
+    """A second pass of the series operators compiles no generated class.
+
+    One pass (retention-tier checksums, LOCF gap-fill, ``minmax_long``, the
+    contract rows on them, continuous-rollup refreshes) needs more distinct
+    whole-stage-codegen classes than Spark's default cache of 100 holds, so
+    with that default every pass recompiles most of them.  The cache is
+    sized once per JVM, so this runs in a fresh interpreter whose first
+    session comes from ``get_spark``.  Counts Janino compiles, not time."""
+    r = subprocess.run(
+        [sys.executable, "-c", SERIES_PASSES, str(tmp_path), sf_dir],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    first, second = json.loads(r.stdout.strip().splitlines()[-1])
+    # the pass is in the eviction regime of the default cache
+    assert first > 100, (first, second)
+    assert second == 0, (first, second)

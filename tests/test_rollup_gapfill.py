@@ -16,7 +16,9 @@ from tsdownsample_spark.operators.rollup import (
 
 @pytest.fixture(scope="module")
 def events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet").cache()
+    df = spark.read.parquet(f"{sf_dir}/events.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_tier_1m_matches_pandas(spark, events):

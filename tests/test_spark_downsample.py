@@ -22,7 +22,9 @@ from tsdownsample_spark.sources.synth import synth_token_rows, synth_token_table
 
 @pytest.fixture(scope="module")
 def token_df(spark):
-    return synth_token_table(spark, n_docs=40, seed=42, partitions=4).cache()
+    df = synth_token_table(spark, n_docs=40, seed=42, partitions=4).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -24,12 +24,16 @@ from tsdownsample_spark.operators.text import doc_fingerprint, lang_id, text_fea
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+    df = spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def embeds(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 class TestText:
